@@ -46,10 +46,14 @@ object SpatialJoin {
       // each point scans it in a codegen loop — zero joins, zero index
       // fan-out, exactly the brute-force definition (so equivalence to
       // the cell-probe path is by construction). Per-point cost is
-      // O(nCentres), so the bound must stay dimension-table-sized; a
-      // planet's ~10⁶ admin centres exceed it and keep the cell-probe
-      // index path.
-      knnDenseMaxCentres: Long = 1024L)
+      // O(nCentres), so the bound must stay dimension-table-sized. 2048
+      // covers a compact admin world of ~1.5k centres: there the index
+      // path's knnLevel-9 probe disk is not selective (~1,200 centre
+      // rows per point) and adds a checkpointed probe, a fallback join
+      // and two gather joins, so scanning every centre costs no more per
+      // point and plans no join. A planet's ~10⁶ admin centres exceed it
+      // and keep the cell-probe index path.
+      knnDenseMaxCentres: Long = 2048L)
 
   /** Geoparse: url + packed coordinate; drops pages with no mention.
     * Column pruning matters here — only (url, text) are read, never
@@ -275,6 +279,9 @@ object SpatialJoin {
   def knnCentres(spark: SparkSession, points: DataFrame,
       centreIdx: CentreIndex, p: Params): DataFrame = {
     require(p.knnLevel >= 1, "knnLevel must be >= 1")
+    // nCentres > 0: with no centre the top-k is empty, and element_at
+    // on an empty array throws under ANSI — the index path returns the
+    // empty result instead
     if (centreIdx.nCentres > 0 && centreIdx.nCentres <= p.knnDenseMaxCentres)
       return knnDense(points, collectCentres(centreIdx), k = 1)
     // each centre-index broadcast hint is kept only while its exploded

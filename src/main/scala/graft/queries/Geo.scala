@@ -114,7 +114,11 @@ object Geo {
     * (exactly the intended production shape: q_page_join/knn/tiles each
     * rebuilt it in round 1). Session-keyed: Prepared holds
     * localCheckpointed Datasets whose blocks die with the SparkContext
-    * (unlike adminAreasCached, which stores plain collected rows). */
+    * (unlike adminAreasCached, which stores plain collected rows).
+    * The cache is never invalidated, so it assumes the fixture file is
+    * immutable: the prep's [[SpatialJoin.CentreIndex]], and the dense
+    * kNN centre rows it collects on first use, keep the first read's
+    * centres. */
   private lazy val preparedCached =
     new graft.util.SessionCache[SpatialJoin.Prepared]
 
@@ -124,7 +128,10 @@ object Geo {
   /** The nation-centre kNN index, staged once per (session, dir) — a
     * 25-row dimension-table input both kNN gates consume; the kNN
     * operator under test still runs per gate (the same fixture-staging
-    * pattern as [[prepared]] / the OSM fixture). */
+    * pattern as [[prepared]] / the OSM fixture). Keyed by dir and
+    * never invalidated, so it assumes an immutable fixture dir: the
+    * index, and the dense kNN centre rows it memoizes, keep the first
+    * read's centres. */
   private lazy val nationIdxCached = new graft.util.SessionCache[
     scala.collection.concurrent.TrieMap[String, SpatialJoin.CentreIndex]]
 

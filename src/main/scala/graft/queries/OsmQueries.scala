@@ -53,6 +53,22 @@ object OsmQueries {
         .localCheckpoint()
     }
 
+  /** (row count, ids with more than one version, invisible rows) of an
+    * entity stream, in one aggregation pass instead of three driver
+    * actions. An empty stream gives (0, 0, 0): the outer `sum`s are
+    * null over no groups, hence the coalesce. */
+  private[graft] def historyStats(
+      osm: org.apache.spark.sql.Dataset[graft.model.OsmEntity]): (Long, Long, Long) = {
+    val r = osm.toDF().groupBy("kind", "id")
+      .agg(count(lit(1)).as("cnt"),
+        sum(when(col("visible"), 0L).otherwise(1L)).as("inv"))
+      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
+        count(when(col("cnt") > 1, 1)).as("multi"),
+        coalesce(sum(col("inv")), lit(0L)).as("invis"))
+      .head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
   /** Deterministic MULTI-VERSION (history) fixture — the reference's
     * `history-*` test ladder shape (/root/reference/bin/run-tests.sh:
     * 4-8, HistoricalInformation src/lib.rs:179): version chains per id,
@@ -142,18 +158,8 @@ object OsmQueries {
         val dPbf = Normalize.diffCount(osm, back)
         val dTables = Normalize.diffCount(back,
           Normalize.reassemble(s, Normalize.demux(back)))
-        // one aggregation pass computes all three stream stats (row
-        // count, multi-version ids, invisible rows) instead of three
-        // separate driver actions over the same checkpointed frame
-        val stats = back.toDF().groupBy("kind", "id")
-          .agg(count(lit(1)).as("cnt"),
-            sum(when(col("visible"), 0L).otherwise(1L)).as("inv"))
-          .agg(sum(col("cnt")).as("n"),
-            count(when(col("cnt") > 1, 1)).as("multi"),
-            sum(col("inv")).as("invis"))
-          .head()
-        Seq((stats.getLong(0), stats.getLong(1), stats.getLong(2),
-            dPbf, dTables))
+        val (n, multi, invis) = historyStats(back)
+        Seq((n, multi, invis, dPbf, dTables))
           .toDF("n_entities", "n_multi_ids", "n_invisible",
             "n_diffs_pbf", "n_diffs_tables")
       },

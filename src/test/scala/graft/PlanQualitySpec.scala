@@ -115,15 +115,19 @@ class PlanQualitySpec extends AnyFunSuite {
     val pts = spark.range(1000)
       .select(col("id").cast("string").as("url"),
         (col("id") % 1000000L).as("lat7"), (col("id") % 2000000L).as("lon7"))
-    val centres = spark.range(20)
-      .select(col("id").as("relation_id"),
-        (col("id") * 7777L).as("c_lat7"), (col("id") * 9999L).as("c_lon7"))
-    for (k <- Seq(1, 3)) {
-      val knn =
-        if (k == 1) SpatialJoin.knnCentres(spark, pts, centres, SpatialJoin.Params())
-        else SpatialJoin.knnCentresK(spark, pts, centres, SpatialJoin.Params(), k)
-      val plan = knn.queryExecution.executedPlan.toString()
-      assert(!plan.contains("Join"), s"dense kNN (k=$k) must be join-free:\n$plan")
+    // 1,520 centres: the size of a compact admin world, dense by default
+    for (nCentres <- Seq(20L, 1520L)) {
+      val centres = spark.range(nCentres)
+        .select(col("id").as("relation_id"),
+          (col("id") * 7777L).as("c_lat7"), (col("id") * 9999L).as("c_lon7"))
+      for (k <- Seq(1, 3)) {
+        val knn =
+          if (k == 1) SpatialJoin.knnCentres(spark, pts, centres, SpatialJoin.Params())
+          else SpatialJoin.knnCentresK(spark, pts, centres, SpatialJoin.Params(), k)
+        val plan = knn.queryExecution.executedPlan.toString()
+        assert(!plan.contains("Join"),
+          s"dense kNN (k=$k, $nCentres centres) must be join-free:\n$plan")
+      }
     }
   }
 
@@ -150,6 +154,35 @@ class PlanQualitySpec extends AnyFunSuite {
       SpatialJoin.Params(knnLevel = 6, knnMaxRing = 2, knnDenseMaxCentres = 0L), k = 3)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(dense3 == gen3 && dense3.size == 3 * dense1.size)
+  }
+
+  test("kNN dense and index paths are output-identical at 1,520 clustered centres (k=1 and k=3)") {
+    // a compact admin world: 1,520 centres, 80% of them in a 1° hot
+    // region, pages scattered over and around it
+    val pts = spark.range(3000)
+      .select(col("id").cast("string").as("url"),
+        ((col("id") * 104729L) % 30000000L + 400000000L).as("lat7"),
+        ((col("id") * 7919L) % 30000000L + 100000000L).as("lon7"))
+    val hot = col("id") % 5 =!= 0
+    val centres = spark.range(1520)
+      .select(col("id").as("relation_id"),
+        when(hot, (col("id") * 7777777L) % 10000000L + 405000000L)
+          .otherwise((col("id") * 7777777L) % 1800000001L - 900000000L).as("c_lat7"),
+        when(hot, (col("id") * 9999991L) % 10000000L + 105000000L)
+          .otherwise((col("id") * 9999991L) % 3600000001L - 1800000000L).as("c_lon7"))
+    val idx = SpatialJoin.CentreIndex.of(centres)
+    val dense = SpatialJoin.Params()
+    val index = SpatialJoin.Params(knnDenseMaxCentres = 0L)
+    val dense1 = SpatialJoin.knnCentres(spark, pts, idx, dense)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val index1 = SpatialJoin.knnCentres(spark, pts, idx, index)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(dense1 == index1 && dense1.size == 3000)
+    val dense3 = SpatialJoin.knnCentresK(spark, pts, idx, dense, k = 3)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+    val index3 = SpatialJoin.knnCentresK(spark, pts, idx, index, k = 3)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+    assert(dense3 == index3 && dense3.size == 3 * 3000)
   }
 
   test("kNN probe disk DROPS the broadcast hint above the row bound (degrades to shuffle, not OOM)") {

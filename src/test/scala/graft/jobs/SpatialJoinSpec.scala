@@ -224,4 +224,63 @@ class SpatialJoinSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(a == b)
   }
+
+  // degenerate kNN inputs, on both paths: the dense default and the
+  // cell-probe index path (knnDenseMaxCentres = 0)
+  private val knnPaths = Seq("dense" -> SpatialJoin.Params(),
+    "index" -> SpatialJoin.Params(knnDenseMaxCentres = 0L))
+  private def knnPoints(rows: (String, java.lang.Long, java.lang.Long)*) =
+    rows.toDF("url", "lat7", "lon7")
+  private def knnCentreRows(rows: (Long, Long, Long)*) =
+    rows.toDF("relation_id", "c_lat7", "c_lon7")
+
+  test("kNN with no centres returns an empty result with the k=1 schema") {
+    val pts = knnPoints(("a", 1L, 2L), ("b", 3L, 4L))
+    val knn = SpatialJoin.knnCentres(spark, pts, knnCentreRows(), SpatialJoin.Params())
+    assert(knn.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("url", "string"), ("nn_relation_id", "bigint")))
+    assert(knn.collect().isEmpty)
+  }
+
+  test("kNN with no points, or only null coordinates, returns an empty result") {
+    val centres = knnCentreRows((1L, 0L, 0L), (2L, 100L, 100L), (3L, -5L, 7L))
+    val none = knnPoints()
+    val nulls = knnPoints(("a", null, 5L), ("b", 5L, null), ("c", null, null))
+    for ((path, p) <- knnPaths; pts <- Seq(none, nulls)) {
+      assert(SpatialJoin.knnCentres(spark, pts, centres, p).collect().isEmpty, path)
+      assert(SpatialJoin.knnCentresK(spark, pts, centres, p, 3).collect().isEmpty, path)
+    }
+    // mixed: the null-coordinate rows drop, the rest keep their answer
+    val mixed = knnPoints(("a", null, 5L), ("b", 90L, 95L))
+    for ((path, p) <- knnPaths)
+      assert(SpatialJoin.knnCentres(spark, mixed, centres, p).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("b", 2L)), path)
+  }
+
+  test("kNN merges duplicate-url points over the multiset of their pairs") {
+    val centres = knnCentreRows((1L, 0L, 0L), (2L, 1000L, 0L), (3L, 5000L, 0L))
+    // url "a" has one point next to centre 3 and one between 1 and 2
+    val pts = knnPoints(("a", 4990L, 0L), ("a", 400L, 0L), ("b", 0L, 10L))
+    for ((path, p) <- knnPaths) {
+      val k1 = SpatialJoin.knnCentres(spark, pts, centres, p).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      assert(k1 == Set(("a", 3L), ("b", 1L)), path)
+      // a's 6 pairs by d2: (3: 10²), (1: 400²), (2: 600²), ...
+      val k3 = SpatialJoin.knnCentresK(spark, pts, centres, p, 3).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+      assert(k3.filter(_._1 == "a") == Set(("a", 1, 3L), ("a", 2, 1L), ("a", 3, 2L)), path)
+    }
+  }
+
+  test("knnCentresK requires 1 <= k <= nCentres") {
+    val pts = knnPoints(("a", 1L, 2L))
+    val centres = knnCentreRows((1L, 0L, 0L), (2L, 100L, 100L))
+    for ((path, p) <- knnPaths; k <- Seq(0, 3)) {
+      val e = intercept[IllegalArgumentException](
+        SpatialJoin.knnCentresK(spark, pts, centres, p, k))
+      assert(e.getMessage.contains(s"k=$k outside [1, nCentres=2]"), path)
+    }
+    intercept[IllegalArgumentException](
+      SpatialJoin.knnCentresK(spark, pts, knnCentreRows(), SpatialJoin.Params(), 1))
+  }
 }

@@ -70,4 +70,10 @@ class NormalizeSpec extends AnyFunSuite {
       else e)
     assert(Normalize.diffCount(osm, perturbed) == 1)
   }
+
+  test("history stats: fused counts on the history fixture, zeros on an empty stream") {
+    import graft.queries.OsmQueries.{historyFixture, historyStats}
+    assert(historyStats(historyFixture(spark)) == ((151L, 48L, 14L)))
+    assert(historyStats(spark.emptyDataset[graft.model.OsmEntity]) == ((0L, 0L, 0L)))
+  }
 }

@@ -13,42 +13,48 @@ class SnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val fixture = "/root/reference/tests/fixtures/niue-230612.osm.pbf"
-  private val root = "/tmp/graft-test-snap"
 
-  private def rmRoot(): Unit = {
+  /** Runs `body` on a fresh snapshot root, deleted afterwards, so no
+    * test reads another's state and no run leaves its snapshots behind. */
+  private def withRoot(tag: String)(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory(s"graft-test-snap-$tag")
     def rm(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles().foreach(rm)
       p.delete()
     }
-    rm(new java.io.File(root))
+    try body(root.toString) finally rm(root.toFile)
   }
 
   test("fresh run computes all stages; rerun resumes all with identical outputs") {
-    rmRoot()
-    val r1 = Pipeline.run(spark, fixture, 2000, root)
-    assert(r1.stages.values.forall(!_.resumed))
-    assert(r1.stages("tiles").rows > 0)
-    val r2 = Pipeline.run(spark, fixture, 2000, root)
-    assert(r2.stages.values.forall(_.resumed), "second run must resume everything")
-    for ((k, s1) <- r1.stages) {
-      assert(r2.stages(k).key == s1.key)
-      assert(r2.stages(k).rows == s1.rows)
+    withRoot("rerun") { root =>
+      val r1 = Pipeline.run(spark, fixture, 2000, root)
+      assert(r1.stages.values.forall(!_.resumed))
+      assert(r1.stages("tiles").rows > 0)
+      val r2 = Pipeline.run(spark, fixture, 2000, root)
+      assert(r2.stages.values.forall(_.resumed), "second run must resume everything")
+      for ((k, s1) <- r1.stages) {
+        assert(r2.stages(k).key == s1.key)
+        assert(r2.stages(k).rows == s1.rows)
+      }
     }
   }
 
   test("kill between stages: later stages recompute, earlier resume") {
-    // simulate a kill after 'cover' by deleting the join+tiles manifests
-    val manifests = Paths.get(root, "_manifests")
-    Files.list(manifests).forEach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("join-") || n.startsWith("tiles-")) Files.delete(p)
+    withRoot("kill") { root =>
+      Pipeline.run(spark, fixture, 2000, root)
+      // simulate a kill after 'cover' by deleting the join+tiles manifests
+      val manifests = Paths.get(root, "_manifests")
+      Files.list(manifests).forEach { p =>
+        val n = p.getFileName.toString
+        if (n.startsWith("join-") || n.startsWith("tiles-")) Files.delete(p)
+      }
+      val r3 = Pipeline.run(spark, fixture, 2000, root)
+      assert(r3.stages("admin_areas").resumed)
+      assert(r3.stages("cover").resumed)
+      assert(!r3.stages("join").resumed)
+      assert(!r3.stages("tiles").resumed)
+      assert(r3.stages("tiles").rows > 0)
     }
-    val r3 = Pipeline.run(spark, fixture, 2000, root)
-    assert(r3.stages("admin_areas").resumed)
-    assert(r3.stages("cover").resumed)
-    assert(!r3.stages("join").resumed)
-    assert(!r3.stages("tiles").resumed)
-    assert(r3.stages("tiles").rows > 0)
   }
 
   test("a stage name containing quotes round-trips (manifest is real JSON, key path-safe)") {
@@ -121,17 +127,19 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("different inputs get a different snapshot key (lineage-addressed)") {
-    val r4 = Pipeline.run(spark, fixture, 3000, root)
-    val r2 = Pipeline.run(spark, fixture, 2000, root)
-    assert(r4.stages("join").key != r2.stages("join").key)
-    assert(r4.stages("admin_areas").key == r2.stages("admin_areas").key)
-    // manifest JSON carries lineage + per-file rows
-    val mf = Files.list(Paths.get(root, "_manifests")).iterator()
-    var sawLineage = false
-    while (mf.hasNext) {
-      val s = new String(Files.readAllBytes(mf.next()))
-      if (s.contains("\"lineage\":[\"admin_areas-")) sawLineage = true
+    withRoot("inputs") { root =>
+      val r4 = Pipeline.run(spark, fixture, 3000, root)
+      val r2 = Pipeline.run(spark, fixture, 2000, root)
+      assert(r4.stages("join").key != r2.stages("join").key)
+      assert(r4.stages("admin_areas").key == r2.stages("admin_areas").key)
+      // manifest JSON carries lineage + per-file rows
+      val mf = Files.list(Paths.get(root, "_manifests")).iterator()
+      var sawLineage = false
+      while (mf.hasNext) {
+        val s = new String(Files.readAllBytes(mf.next()))
+        if (s.contains("\"lineage\":[\"admin_areas-")) sawLineage = true
+      }
+      assert(sawLineage)
     }
-    assert(sawLineage)
   }
 }
